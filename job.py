@@ -95,12 +95,20 @@ def main(argv: list[str] | None = None) -> int:
         p.error("--export requires --assemble")
 
     # Late imports so --py-files distribution is what resolves the package.
-    from ocr_spark.pipeline import (
-        DEFAULT_NUM_PARTS,
-        DEFAULT_TURN_BUCKET,
-        read_lineage,
-        run_pipeline,
-    )
+    from ocr_spark import pipeline as pl
+
+    if args.snapshot_table:
+        runner, read_lineage, read_extracted = (
+            pl.run_pipeline_snapshots,
+            pl.read_lineage_table,
+            pl.read_extracted_table,
+        )
+    else:
+        runner, read_lineage, read_extracted = (
+            pl.run_pipeline,
+            pl.read_lineage,
+            pl.read_extracted,
+        )
 
     spark = SparkSession.builder.appName("ocr_spark.job").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -112,25 +120,16 @@ def main(argv: list[str] | None = None) -> int:
     # warm-up duration is still reported in the summary line.
     t_warm = time.monotonic()
     if not args.no_warmup:
-        from ocr_spark.pipeline import warmup_python_workers
-
-        warmup_python_workers(spark)
+        pl.warmup_python_workers(spark)
     warmup_sec = time.monotonic() - t_warm
 
     t0 = time.monotonic()
-    runner = run_pipeline
-    lineage_reader = read_lineage
-    if args.snapshot_table:
-        from ocr_spark.pipeline import read_lineage_table, run_pipeline_snapshots
-
-        runner = run_pipeline_snapshots
-        lineage_reader = read_lineage_table
-    extracted = runner(
+    runner(
         spark,
         args.input,
         args.output,
-        num_parts=args.num_parts or DEFAULT_NUM_PARTS,
-        turn_bucket=args.turn_bucket or DEFAULT_TURN_BUCKET,
+        num_parts=args.num_parts or pl.DEFAULT_NUM_PARTS,
+        turn_bucket=args.turn_bucket or pl.DEFAULT_TURN_BUCKET,
         start_turn=args.start_turn,
         end_turn=args.end_turn,
         resume=args.resume,
@@ -140,7 +139,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     # Row count comes from the lineage table (one row per logical part),
     # not a second scan over the freshly written data files.
-    lineage = lineage_reader(spark, args.output)
+    lineage = read_lineage(spark, args.output)
     lin = lineage.agg(
         F.count("*").alias("parts"),
         F.coalesce(F.sum("n_turns"), F.lit(0)).alias("rows"),
@@ -159,14 +158,7 @@ def main(argv: list[str] | None = None) -> int:
         )
     assembled_rows = None
     if args.assemble:
-        from ocr_spark.pipeline import (
-            assemble_conversations,
-            read_extracted,
-            read_extracted_table,
-        )
-
-        reader = read_extracted_table if args.snapshot_table else read_extracted
-        assembled = assemble_conversations(reader(spark, args.output))
+        assembled = pl.assemble_conversations(read_extracted(spark, args.output))
         # sibling dir: the output root is a rec=...-partitioned dataset and
         # must not grow foreign subdirectories
         apath = args.output.rstrip("/") + "_assembled"

@@ -37,14 +37,6 @@ def _dot(a: str, b: str):
     )
 
 
-def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
-    return df.withColumn(
-        out,
-        _dot(a, b)
-        / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b))),
-    )
-
-
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,

@@ -1,17 +1,27 @@
 """The distributed extraction pipeline.
 
-Dataflow (SURVEY.md §3.4):
+Dataflow (SURVEY.md §3.4). ``extract_stage`` is the only place that knows
+the part layout; ``run_pipeline`` (partitioned parquet) and
+``run_pipeline_snapshots`` (snapshot table) differ only in how they read the
+finished lineage and how they write the output:
 
     read transcripts parquet
       → optional turn-range filter          (partition/rowgroup pruning)
-      → optional resume anti-join           (skip finished logical parts)
+    extract_stage:
       → part_id = pmod(xxhash64(conv_id, floor(turn_idx/BUCKET)), P)
-        repartition(P, part_id)             (explicit SALTED repartition:
+      → optional resume anti-join           (broadcast left-anti on the
+                                             finished parts; refused when
+                                             their recorded layout differs)
+      → optional only_parts filter
+      → select the kernel columns, repartition(P, part_id)
+                                            (explicit SALTED repartition:
                                              the turn bucket splits long
                                              conversations across parts)
       → ONE fused mapInArrow stage: route(html|grid|json|text) → extract
         → clean → serialize, emitting per-logical-part LINEAGE rows in-band
-      → write parquet partitioned by rec ∈ {data, lineage}
+        (each records the layout: num_parts, turn_bucket)
+    → write parquet partitioned by rec ∈ {data, lineage}
+      (or one atomic snapshot-table commit)
 
 Design notes for 100-TB scale:
 
@@ -33,6 +43,7 @@ from __future__ import annotations
 import json
 import time
 from collections.abc import Iterator
+from functools import partial, update_wrapper
 from typing import Any
 
 import numpy as np
@@ -50,6 +61,7 @@ from ocr_spark.kernels.extract import (
     TOOL_JSON,
     extract_turn,
 )
+from ocr_spark.operators import relational
 
 #: Default number of logical resume partitions; at 10^12 turns this would be
 #: sized to ~1-4 GB of input per part (e.g. 2^17 parts), here sized for
@@ -102,6 +114,8 @@ LINEAGE_JSON_SCHEMA = T.StructType(
         T.StructField("error_count", T.LongType()),
         T.StructField("retry_count", T.LongType()),
         T.StructField("status", T.StringType()),
+        T.StructField("num_parts", T.IntegerType()),
+        T.StructField("turn_bucket", T.LongType()),
     ]
 )
 
@@ -215,109 +229,86 @@ def _extract_batch_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _extract_batches(
+    batches: Iterator[pa.RecordBatch], *, num_parts: int, turn_bucket: int
+) -> Iterator[pa.RecordBatch]:
     """The fused extraction kernel: one Arrow batch in, one out, plus one
     lineage row per logical part at end-of-partition.
 
     Per-part lineage stats (turn range, wrapping-sum checksum, error count)
-    are accumulated with vectorized pandas groupby aggregates per batch and
-    merged across batches — no per-row Python outside the payload kernels.
+    are vectorized pandas groupby aggregates per batch, concatenated and
+    aggregated once more for parts that span batches — no per-row Python
+    outside the payload kernels. pandas sums the uint64 digests modulo 2^64,
+    so the checksum is the order-insensitive wrapping sum. Each lineage row
+    records the part layout (``num_parts``, ``turn_bucket``) so resume can
+    refuse a run with a different one.
     """
     start = time.monotonic()
-    acc: dict[int, list[Any]] = {}
+    per_batch: list[pd.DataFrame] = []
     for batch in batches:
-        pdf = batch.to_pandas()
-        out = _extract_batch_frame(pdf)
-
+        out = _extract_batch_frame(batch.to_pandas())
         out["_ck"] = turn_checksums(out["conv_id"], out["turn_idx"], out["extracted_text"])
         out["_err"] = (out["status"] == "error").astype("int64")
-        grp = out.groupby("part_id", sort=False).agg(
-            conv_min=("conv_id", "min"),
-            conv_max=("conv_id", "max"),
-            turn_min=("turn_idx", "min"),
-            turn_max=("turn_idx", "max"),
-            n_turns=("conv_id", "size"),
-            checksum=("_ck", lambda s: int(np.add.reduce(s.to_numpy(np.uint64)))),
-            error_count=("_err", "sum"),
-            retry_count=("_retries", "sum"),
+        per_batch.append(
+            out.groupby("part_id", sort=False).agg(
+                conv_min=("conv_id", "min"),
+                conv_max=("conv_id", "max"),
+                turn_min=("turn_idx", "min"),
+                turn_max=("turn_idx", "max"),
+                n_turns=("conv_id", "size"),
+                checksum=("_ck", "sum"),
+                error_count=("_err", "sum"),
+                retry_count=("_retries", "sum"),
+            )
         )
-        for pid, row in grp.iterrows():
-            st = acc.get(int(pid))
-            if st is None:
-                acc[int(pid)] = [
-                    row["conv_min"],
-                    row["conv_max"],
-                    int(row["turn_min"]),
-                    int(row["turn_max"]),
-                    int(row["n_turns"]),
-                    int(row["checksum"]) & ((1 << 64) - 1),
-                    int(row["error_count"]),
-                    int(row["retry_count"]),
-                ]
-            else:
-                st[0] = min(st[0], row["conv_min"])
-                st[1] = max(st[1], row["conv_max"])
-                st[2] = min(st[2], int(row["turn_min"]))
-                st[3] = max(st[3], int(row["turn_max"]))
-                st[4] += int(row["n_turns"])
-                st[5] = (st[5] + int(row["checksum"])) & ((1 << 64) - 1)
-                st[6] += int(row["error_count"])
-                st[7] += int(row["retry_count"])
-
         out = out.drop(columns=["_ck", "_err", "_retries"])
         yield pa.RecordBatch.from_pandas(
             out, schema=_ARROW_SCHEMA, preserve_index=False
         )
-    stats = {
-        pid: {
-            "conv_min": st[0],
-            "conv_max": st[1],
-            "turn_min": st[2],
-            "turn_max": st[3],
-            "n_turns": st[4],
-            "checksum": st[5],
-            "error_count": st[6],
-            "retry_count": st[7],
-        }
-        for pid, st in acc.items()
-    }
-    if stats:
-        duration_ms = int((time.monotonic() - start) * 1000)
-        lineage_rows = [
-            json.dumps(
-                {
-                    "part_id": pid,
-                    "conv_min": st["conv_min"],
-                    "conv_max": st["conv_max"],
-                    "turn_min": st["turn_min"],
-                    "turn_max": st["turn_max"],
-                    "n_turns": st["n_turns"],
-                    "checksum": f"{st['checksum']:016x}",
-                    "duration_ms": duration_ms,
-                    "error_count": st["error_count"],
-                    "retry_count": st["retry_count"],
-                    "status": "ok",
-                },
-                sort_keys=True,
-            )
-            for pid, st in sorted(stats.items())
-        ]
-        pids = sorted(stats)
-        k = len(pids)
-        yield pa.RecordBatch.from_pydict(
+    if not per_batch:
+        return
+    parts = pd.concat(per_batch)
+    if not parts.index.is_unique:  # a part spans batches: merge its rows
+        parts = parts.groupby(level=0).agg(
             {
-                "rec": ["lineage"] * k,
-                "part_id": pids,
-                "conv_id": [""] * k,
-                "turn_idx": [-1] * k,
-                "tool": [LINEAGE_TOOL] * k,
-                "extracted_text": lineage_rows,
-                "n_rows": [0] * k,
-                "n_cols": [0] * k,
-                "status": ["ok"] * k,
-            },
-            schema=_ARROW_SCHEMA,
+                "conv_min": "min",
+                "conv_max": "max",
+                "turn_min": "min",
+                "turn_max": "max",
+                "n_turns": "sum",
+                "checksum": "sum",
+                "error_count": "sum",
+                "retry_count": "sum",
+            }
         )
+    extra = {
+        "duration_ms": int((time.monotonic() - start) * 1000),
+        "status": "ok",
+        "num_parts": num_parts,
+        "turn_bucket": turn_bucket,
+    }
+    lineage_rows = [
+        json.dumps(
+            {**r, "part_id": pid, "checksum": f"{r['checksum']:016x}", **extra},
+            sort_keys=True,
+        )
+        for pid, r in parts.to_dict("index").items()
+    ]
+    k = len(parts)
+    yield pa.RecordBatch.from_pydict(
+        {
+            "rec": ["lineage"] * k,
+            "part_id": parts.index.tolist(),
+            "conv_id": [""] * k,
+            "turn_idx": [-1] * k,
+            "tool": [LINEAGE_TOOL] * k,
+            "extracted_text": lineage_rows,
+            "n_rows": [0] * k,
+            "n_cols": [0] * k,
+            "status": ["ok"] * k,
+        },
+        schema=_ARROW_SCHEMA,
+    )
 
 
 def warmup_python_workers(df_or_spark) -> None:
@@ -354,36 +345,97 @@ def extract_stage(
     df: DataFrame,
     num_parts: int = DEFAULT_NUM_PARTS,
     turn_bucket: int = DEFAULT_TURN_BUCKET,
+    finished: DataFrame | None = None,
+    only_parts: list[int] | None = None,
 ) -> DataFrame:
-    """transcripts DataFrame → extracted DataFrame (data + lineage rows)."""
-    salted = (
-        with_part_id(df, num_parts, turn_bucket)
+    """transcripts DataFrame → extracted DataFrame (data + lineage rows).
+
+    ``finished`` (one ``part_id`` column) drops the logical parts a previous
+    run completed, through a broadcast left-anti join; ``only_parts`` keeps
+    just the listed parts (used by tests to simulate a job killed after k
+    partitions).
+    """
+    df = with_part_id(df, num_parts, turn_bucket)
+    if finished is not None:
+        df = relational.anti_join_unfinished(df, finished, "part_id")
+    if only_parts is not None:
+        df = df.filter(F.col("part_id").isin([int(p) for p in only_parts]))
+    # the wrapper keeps the kernel's name in plans and the Spark UI
+    kernel = update_wrapper(
+        partial(_extract_batches, num_parts=num_parts, turn_bucket=turn_bucket),
+        _extract_batches,
+    )
+    return (
         # prune to the kernel's columns BEFORE the shuffle: ts (and any
         # extra user columns) never cross the exchange or the Python worker
-        .select("part_id", "conv_id", "turn_idx", "text", "tool")
+        df.select("part_id", "conv_id", "turn_idx", "text", "tool")
         .repartition(num_parts, "part_id")
+        .mapInArrow(kernel, EXTRACT_SCHEMA)
     )
-    return salted.mapInArrow(_extract_batches, EXTRACT_SCHEMA)
 
 
-def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+def _finished_parts(lineage: DataFrame, num_parts: int, turn_bucket: int) -> DataFrame:
+    """The ``part_id`` of every ok lineage row, for ``extract_stage(finished=)``.
+
+    Part ids only mean the same turns under the same layout, so this raises
+    ``ValueError`` when any finished row was written with another
+    ``num_parts`` or ``turn_bucket``, or records none (an output written
+    before lineage carried the layout). Resuming across layouts would
+    silently skip turns whose new part id happens to be finished.
+    """
+    ok = lineage.filter(F.col("status") == "ok")
+    layouts = {tuple(r) for r in ok.select("num_parts", "turn_bucket").distinct().collect()}
+    other = sorted(layouts - {(num_parts, turn_bucket)}, key=str)
+    if other:
+        found = "; ".join(f"num_parts={n}, turn_bucket={b}" for n, b in other)
+        if any(None in layout for layout in other):
+            found += " (None: written before lineage recorded the layout)"
+        raise ValueError(
+            f"cannot resume with num_parts={num_parts}, turn_bucket={turn_bucket}: "
+            f"the output's finished parts were written with {found}; resume with "
+            "that layout, or rerun without resume"
+        )
+    return ok.select("part_id").distinct()
 
 
-def read_extracted(spark: SparkSession, output_path: str) -> DataFrame:
-    """The data rows of a pipeline output (rec partition pruned at scan)."""
-    df = spark.read.parquet(output_path)
+def _read_turn_range(
+    spark: SparkSession, path: str, start_turn: int | None, end_turn: int | None
+) -> DataFrame:
+    """The transcripts, restricted to ``start_turn ≤ turn_idx ≤ end_turn``."""
+    df = spark.read.parquet(path)
+    if start_turn is not None:
+        df = df.filter(F.col("turn_idx") >= F.lit(int(start_turn)))
+    if end_turn is not None:
+        df = df.filter(F.col("turn_idx") <= F.lit(int(end_turn)))
+    return df
+
+
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    jvm = spark.sparkContext._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(p)
+
+
+def _data_rows(df: DataFrame) -> DataFrame:
     return df.filter(F.col("rec") == "data").drop("rec")
 
 
-def read_lineage(spark: SparkSession, output_path: str) -> DataFrame:
-    """The lineage table of a pipeline output, JSON-decoded."""
-    df = spark.read.parquet(output_path)
+def _lineage_rows(df: DataFrame) -> DataFrame:
     return (
         df.filter(F.col("rec") == "lineage")
         .select(F.from_json("extracted_text", LINEAGE_JSON_SCHEMA).alias("l"))
         .select("l.*")
     )
+
+
+def read_extracted(spark: SparkSession, output_path: str) -> DataFrame:
+    """The data rows of a pipeline output (rec partition pruned at scan)."""
+    return _data_rows(spark.read.parquet(output_path))
+
+
+def read_lineage(spark: SparkSession, output_path: str) -> DataFrame:
+    """The lineage table of a pipeline output, JSON-decoded."""
+    return _lineage_rows(spark.read.parquet(output_path))
 
 
 def run_pipeline(
@@ -403,38 +455,22 @@ def run_pipeline(
     ``resume=True`` reads the existing output's lineage, and processes only
     logical parts without an ok lineage row, appending to the same output —
     the reference's per-page skip-and-continue (scripts/ExtractX_OCR.py:282)
-    scaled up to partition granularity (BASELINE.json north_rule).
-    ``only_parts`` restricts processing (used by tests to simulate a job
-    killed after k partitions).
+    scaled up to partition granularity (BASELINE.json north_rule). Only a
+    missing output makes a resume a fresh run; a lineage that cannot be
+    read, or was written with another layout, raises instead of
+    overwriting finished work.
     """
-    df = read_transcripts(spark, input_path)
-    if start_turn is not None:
-        df = df.filter(F.col("turn_idx") >= F.lit(int(start_turn) ))
-    if end_turn is not None:
-        df = df.filter(F.col("turn_idx") <= F.lit(int(end_turn)))
-    df = with_part_id(df, num_parts, turn_bucket)
-    mode = "overwrite"
-    if resume:
-        try:
-            finished = (
-                read_lineage(spark, output_path)
-                .filter(F.col("status") == "ok")
-                .select("part_id")
-                .distinct()
-            )
-            finished.count()  # force read now; a missing output → fresh run
-        except Exception:
-            finished = None
-        if finished is not None:
-            df = df.join(F.broadcast(finished), "part_id", "left_anti")
-            mode = "append"
-    if only_parts is not None:
-        df = df.filter(F.col("part_id").isin([int(p) for p in only_parts]))
-    out = (
-        df.select("part_id", "conv_id", "turn_idx", "text", "tool")
-        .repartition(num_parts, "part_id")
-        .mapInArrow(_extract_batches, EXTRACT_SCHEMA)
+    finished = None
+    if resume and _path_exists(spark, output_path):
+        finished = _finished_parts(read_lineage(spark, output_path), num_parts, turn_bucket)
+    out = extract_stage(
+        _read_turn_range(spark, input_path, start_turn, end_turn),
+        num_parts,
+        turn_bucket,
+        finished=finished,
+        only_parts=only_parts,
     )
+    mode = "overwrite" if finished is None else "append"
     out.write.partitionBy("rec").mode(mode).parquet(output_path)
     return read_extracted(spark, output_path)
 
@@ -462,52 +498,34 @@ def run_pipeline_snapshots(
     """
     from ocr_spark import table as tbl
 
-    df = read_transcripts(spark, input_path)
-    if start_turn is not None:
-        df = df.filter(F.col("turn_idx") >= F.lit(int(start_turn)))
-    if end_turn is not None:
-        df = df.filter(F.col("turn_idx") <= F.lit(int(end_turn)))
-    df = with_part_id(df, num_parts, turn_bucket)
-    overwrite = True
+    finished = None
     if resume and tbl.current_snapshot_id(table_root) is not None:
-        finished = (
-            tbl.read_table(spark, table_root)
-            .filter((F.col("rec") == "lineage") & (F.col("status") == "ok"))
-            .select("part_id")
-            .distinct()
+        finished = _finished_parts(
+            read_lineage_table(spark, table_root), num_parts, turn_bucket
         )
-        df = df.join(F.broadcast(finished), "part_id", "left_anti")
-        overwrite = False
-    if only_parts is not None:
-        df = df.filter(F.col("part_id").isin([int(p) for p in only_parts]))
-    out = (
-        df.select("part_id", "conv_id", "turn_idx", "text", "tool")
-        .repartition(num_parts, "part_id")
-        .mapInArrow(_extract_batches, EXTRACT_SCHEMA)
+    out = extract_stage(
+        _read_turn_range(spark, input_path, start_turn, end_turn),
+        num_parts,
+        turn_bucket,
+        finished=finished,
+        only_parts=only_parts,
     )
-    tbl.commit_append(spark, table_root, out, part_col="part_id", overwrite=overwrite)
+    tbl.commit_append(
+        spark, table_root, out, part_col="part_id", overwrite=finished is None
+    )
     return read_extracted_table(spark, table_root)
 
 
 def read_extracted_table(spark: SparkSession, table_root: str) -> DataFrame:
     from ocr_spark import table as tbl
 
-    return (
-        tbl.read_table(spark, table_root)
-        .filter(F.col("rec") == "data")
-        .drop("rec")
-    )
+    return _data_rows(tbl.read_table(spark, table_root))
 
 
 def read_lineage_table(spark: SparkSession, table_root: str) -> DataFrame:
     from ocr_spark import table as tbl
 
-    return (
-        tbl.read_table(spark, table_root)
-        .filter(F.col("rec") == "lineage")
-        .select(F.from_json("extracted_text", LINEAGE_JSON_SCHEMA).alias("l"))
-        .select("l.*")
-    )
+    return _lineage_rows(tbl.read_table(spark, table_root))
 
 
 ASSEMBLE_SCHEMA = T.StructType(

@@ -18,6 +18,7 @@ rows per task), and the speedup. Usage: python scripts/skew_demo.py
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys
 import time
@@ -39,7 +40,7 @@ def main(argv=None) -> int:
     from pyspark.sql import functions as F
 
     import bench
-    from ocr_spark.pipeline import with_part_id
+    from ocr_spark.pipeline import extract_stage
     from ocr_spark.session import get_spark
 
     spark = get_spark(app="skew-demo", master=f"local[{args.cpus}]")
@@ -93,23 +94,19 @@ def main(argv=None) -> int:
 
     results = {}
     for label, bucket in [("unsalted", 1 << 40), ("salted", 64)]:
-        parted = with_part_id(df, args.num_parts, bucket).select(
-            "part_id", "conv_id", "turn_idx", "text", "tool"
-        )
-        sizes = (
-            parted.groupBy("part_id").count().toPandas()["count"].describe()
-        )
-        from ocr_spark.pipeline import _extract_batches, EXTRACT_SCHEMA
-
+        # the extraction runs in full to emit its end-of-partition lineage
+        # rows; collecting only those discards the data rows like a noop sink
         t0 = time.monotonic()
-        (
-            parted.repartition(args.num_parts, "part_id")
-            .mapInArrow(_extract_batches, EXTRACT_SCHEMA)
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
+        lineage = (
+            extract_stage(df, args.num_parts, bucket)
+            .filter(F.col("rec") == "lineage")
+            .select("extracted_text")
+            .collect()
         )
         wall = time.monotonic() - t0
+        sizes = pd.Series(
+            [json.loads(r["extracted_text"])["n_turns"] for r in lineage]
+        ).describe()
         results[label] = {
             "wall": wall,
             "max_part": int(sizes["max"]),

@@ -105,6 +105,33 @@ def test_lineage_rows(spark, corpus, tmp_path):
         recomputed[pid] = f"{s:016x}"
     for pid, grp in data.groupby("part_id"):
         assert grp["checksum"].iloc[0] == recomputed[pid]
+    # every lineage row records the part layout it was written with
+    assert (lin["num_parts"] == 16).all()
+    assert (lin["turn_bucket"] == 64).all()
+
+
+def test_lineage_merges_across_arrow_batches(spark, corpus):
+    """A part split over many Arrow batches gets the same lineage (turn
+    range, count, checksum, errors) as one that arrives in a single batch."""
+    path, _ = corpus
+
+    def lineage(batch_rows: int) -> pd.DataFrame:
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        old = spark.conf.get(key)
+        spark.conf.set(key, str(batch_rows))
+        try:
+            rows = (
+                extract_stage(spark.read.parquet(path), num_parts=4)
+                .filter(F.col("rec") == "lineage")
+                .select("extracted_text")
+                .collect()
+            )
+        finally:
+            spark.conf.set(key, old)
+        got = pd.DataFrame([json.loads(r["extracted_text"]) for r in rows])
+        return got.drop(columns="duration_ms").sort_values("part_id", ignore_index=True)
+
+    pd.testing.assert_frame_equal(lineage(3), lineage(8192))
 
 
 def test_salting_splits_long_conversations(spark, tmp_path):

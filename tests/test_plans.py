@@ -88,6 +88,17 @@ def test_extract_stage_exchanges_on_salted_part_id(spark):
     assert "ts#" not in exchange_block
     assert "text#" in exchange_block
 
+    # resume shape: the finished parts are anti-joined by broadcast BELOW
+    # the one salted exchange; the big side never shuffles for the join
+    finished = spark.createDataFrame([(0,), (3,)], "part_id int")
+    plan = _plan(extract_stage(df, num_parts=8, finished=finished))
+    shuffles = _exchange_blocks(plan)
+    assert len(shuffles) == 1
+    assert "hashpartitioning(part_id" in shuffles[0]
+    tree = plan.split("\n\n")[0]
+    assert "BroadcastHashJoin LeftAnti" in tree
+    assert tree.index("+- Exchange") < tree.index("BroadcastHashJoin")
+
 
 def test_cosine_topk_broadcasts_query_side(spark):
     from ocr_spark.operators import similarity

@@ -127,3 +127,58 @@ def test_assemble_over_written_output_matches_oracle(spark, corpus, tmp_path):
     ga = got["cell"].map(lambda v: "∅" if v is None or v != v else v)
     wa = want["cell"].map(lambda v: "∅" if v is None or v != v else v)
     assert (ga.values == wa.values).all()
+
+
+def test_resume_refuses_a_different_part_layout(spark, corpus, tmp_path):
+    """Part ids only name the same turns under the same layout: resuming a
+    16-part partial run with 8 parts would skip every turn whose 8-part id
+    is already finished, so it must raise instead."""
+    path, _ = corpus
+    out = str(tmp_path / "out")
+    run_pipeline(spark, path, out, num_parts=16, only_parts=list(range(8)))
+    before = _canon(read_extracted(spark, out))
+    with pytest.raises(ValueError, match="num_parts=8.*num_parts=16"):
+        run_pipeline(spark, path, out, num_parts=8, resume=True)
+    with pytest.raises(ValueError, match="turn_bucket=32.*turn_bucket=64"):
+        run_pipeline(spark, path, out, num_parts=16, turn_bucket=32, resume=True)
+    pd.testing.assert_frame_equal(_canon(read_extracted(spark, out)), before)
+
+
+def test_finished_parts_refuses_lineage_without_layout(spark):
+    """Lineage written before rows recorded their layout cannot be trusted
+    for any layout."""
+    from ocr_spark.pipeline import _finished_parts
+
+    lineage = spark.createDataFrame(
+        [(0, "ok", None, None), (1, "ok", 8, 64)],
+        "part_id int, status string, num_parts int, turn_bucket long",
+    )
+    with pytest.raises(ValueError, match="num_parts=None, turn_bucket=None"):
+        _finished_parts(lineage, 8, 64)
+    assert _finished_parts(lineage.filter("part_id = 1"), 8, 64).collect() == [(1,)]
+
+
+def test_failed_lineage_read_keeps_finished_output(spark, corpus, tmp_path, monkeypatch):
+    """Only a missing output makes a resume a fresh run: any other lineage
+    read failure must propagate, not fall through to an overwrite."""
+    from ocr_spark import pipeline
+
+    path, _ = corpus
+    out = str(tmp_path / "out")
+    run_pipeline(spark, path, out, num_parts=8)
+    before = _canon(read_extracted(spark, out))
+
+    def unreadable(spark, output_path):
+        raise OSError(f"lineage of {output_path} unreadable")
+
+    monkeypatch.setattr(pipeline, "read_lineage", unreadable)
+    with pytest.raises(OSError, match="unreadable"):
+        run_pipeline(spark, path, out, num_parts=8, resume=True)
+    pd.testing.assert_frame_equal(_canon(read_extracted(spark, out)), before)
+
+
+def test_resume_without_output_is_a_fresh_run(spark, corpus, tmp_path):
+    path, pdf = corpus
+    out = str(tmp_path / "never_written")
+    run_pipeline(spark, path, out, num_parts=8, resume=True)
+    assert read_extracted(spark, out).count() == len(pdf)

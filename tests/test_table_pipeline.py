@@ -77,3 +77,12 @@ def test_snapshot_resume_when_done_commits_empty_noop(spark, corpus, tmp_path):
     after = _canon(read_extracted_table(spark, root))
     pd.testing.assert_frame_equal(after, before)
     assert len(after) == len(pdf)
+
+
+def test_snapshot_resume_refuses_a_different_part_layout(spark, corpus, tmp_path):
+    path, _ = corpus
+    root = str(tmp_path / "t3")
+    run_pipeline_snapshots(spark, path, root, num_parts=16, only_parts=list(range(8)))
+    with pytest.raises(ValueError, match="num_parts=8.*num_parts=16"):
+        run_pipeline_snapshots(spark, path, root, num_parts=8, resume=True)
+    assert tbl.current_snapshot_id(root) == 0  # nothing committed
