@@ -22,28 +22,40 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 
-def part_duration_hist(lineage, lo: int, hi: int, nbuckets: int = 8) -> dict:
+def part_duration_hist(durations: list[int], lo: int, hi: int, nbuckets: int = 8) -> dict:
     """Equi-width histogram of per-part ``duration_ms`` over [lo, hi].
 
     Skew at a glance: a straggler part shows up as isolated mass in the
-    last bucket. Lineage is one row per logical part, so this aggregate
-    scans a parts-count-sized table — never the data.
+    last bucket.
     """
     width = max(1, -(-(hi - lo + 1) // nbuckets))
-    buckets = {
-        r["b"]: r["count"]
-        for r in lineage.groupBy(
-            F.floor((F.col("duration_ms") - F.lit(lo)) / F.lit(width))
-            .cast("int")
-            .alias("b")
-        )
-        .count()
-        .collect()
-    }
+    counts = [0] * nbuckets
+    for d in durations:
+        b = (d - lo) // width
+        if 0 <= b < nbuckets:
+            counts[b] += 1
+    return {"min_ms": lo, "width_ms": width, "counts": counts}
+
+
+def lineage_summary(lineage, num_parts: int) -> dict:
+    """Rows, errors and the per-part time distribution of a run, from ONE
+    collect of the lineage table (one row per logical part, so at most
+    ``num_parts`` rows reach the driver — checked, never the data).
+
+    ``part_ms_p50`` is the element ``percentile_approx(duration_ms, 0.5)``
+    returns: the ⌈n/2⌉-th smallest.
+    """
+    rows = lineage.select("n_turns", "error_count", "duration_ms").collect()
+    if len(rows) > num_parts:
+        raise ValueError(f"{len(rows)} lineage rows for {num_parts} parts")
+    ms = sorted(int(r["duration_ms"]) for r in rows)
     return {
-        "min_ms": lo,
-        "width_ms": width,
-        "counts": [buckets.get(i, 0) for i in range(nbuckets)],
+        "parts": len(rows),
+        "rows": sum(int(r["n_turns"]) for r in rows),
+        "errors": sum(int(r["error_count"]) for r in rows),
+        "part_ms_p50": ms[(len(ms) + 1) // 2 - 1] if ms else 0,
+        "part_ms_max": ms[-1] if ms else 0,
+        "part_ms_hist": part_duration_hist(ms, ms[0], ms[-1]) if ms else None,
     }
 
 
@@ -123,12 +135,13 @@ def main(argv: list[str] | None = None) -> int:
         pl.warmup_python_workers(spark)
     warmup_sec = time.monotonic() - t_warm
 
+    num_parts = args.num_parts or pl.DEFAULT_NUM_PARTS
     t0 = time.monotonic()
     runner(
         spark,
         args.input,
         args.output,
-        num_parts=args.num_parts or pl.DEFAULT_NUM_PARTS,
+        num_parts=num_parts,
         turn_bucket=args.turn_bucket or pl.DEFAULT_TURN_BUCKET,
         start_turn=args.start_turn,
         end_turn=args.end_turn,
@@ -139,23 +152,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     # Row count comes from the lineage table (one row per logical part),
     # not a second scan over the freshly written data files.
-    lineage = read_lineage(spark, args.output)
-    lin = lineage.agg(
-        F.count("*").alias("parts"),
-        F.coalesce(F.sum("n_turns"), F.lit(0)).alias("rows"),
-        F.coalesce(F.sum("error_count"), F.lit(0)).alias("errors"),
-        F.coalesce(F.min("duration_ms"), F.lit(0)).alias("min_part_ms"),
-        F.coalesce(F.max("duration_ms"), F.lit(0)).alias("max_part_ms"),
-        F.coalesce(
-            F.percentile_approx("duration_ms", F.lit(0.5)), F.lit(0)
-        ).alias("p50_part_ms"),
-    ).first()
-    n_rows = int(lin["rows"])
-    part_hist = None
-    if lin["parts"]:
-        part_hist = part_duration_hist(
-            lineage, int(lin["min_part_ms"]), int(lin["max_part_ms"])
-        )
+    lin = lineage_summary(read_lineage(spark, args.output), num_parts)
     assembled_rows = None
     if args.assemble:
         assembled = pl.assemble_conversations(read_extracted(spark, args.output))
@@ -195,16 +192,16 @@ def main(argv: list[str] | None = None) -> int:
     print(
         json.dumps(
             {
-                "rows": n_rows,
+                "rows": lin["rows"],
                 "parts_done": lin["parts"],
-                "errors": int(lin["errors"]),
+                "errors": lin["errors"],
                 "wall_sec": round(wall, 2),
                 "warmup_sec": round(warmup_sec, 2),
-                "part_ms_p50": int(lin["p50_part_ms"]),
-                "part_ms_max": int(lin["max_part_ms"]),
-                "part_ms_hist": part_hist,
+                "part_ms_p50": lin["part_ms_p50"],
+                "part_ms_max": lin["part_ms_max"],
+                "part_ms_hist": lin["part_ms_hist"],
                 "assembled_rows": assembled_rows,
-                "turns_per_sec": round(n_rows / wall, 1) if wall > 0 else None,
+                "turns_per_sec": round(lin["rows"] / wall, 1) if wall > 0 else None,
                 "output": args.output,
             }
         )

@@ -13,13 +13,16 @@ finished lineage and how they write the output:
                                              finished parts; refused when
                                              their recorded layout differs)
       → optional only_parts filter
-      → select the kernel columns, repartition(P, part_id)
+      → select the kernel columns, repartition(min(P, slots), part_id)
                                             (explicit SALTED repartition:
                                              the turn bucket splits long
-                                             conversations across parts)
+                                             conversations across parts;
+                                             one task per executor slot,
+                                             each carrying whole parts)
       → ONE fused mapInArrow stage: route(html|grid|json|text) → extract
         → clean → serialize, emitting per-logical-part LINEAGE rows in-band
-        (each records the layout: num_parts, turn_bucket)
+        (each records the part's own time and the layout: num_parts,
+        turn_bucket)
     → write parquet partitioned by rec ∈ {data, lineage}
       (or one atomic snapshot-table commit)
 
@@ -28,6 +31,23 @@ Design notes for 100-TB scale:
 - part_id is DATA-DERIVED (hash of conv_id + turn bucket), not the physical
   partition index, so checkpoint-resume units are stable across cluster
   sizes and retries.
+- Tasks are not parts. The extraction stage runs min(P, slots) tasks
+  (slots = ``defaultParallelism``), hashed on part_id, so a part never
+  spans tasks. Every PySpark task pays a fixed Python cost of 130–300 ms
+  of CPU whatever its size (measured on a 4-core host, CPython 3.11,
+  Spark 4.1): ``pyspark/worker_util.py`` ``setup_spark_files`` calls
+  ``importlib.invalidate_caches()``, which on CPython 3.11 makes every
+  cached zipimporter of the reused worker re-read its archive directory
+  (``pyspark.zip``, 1,328 entries, about 14 times; the spark-core jar
+  twice), and ``pyspark/daemon.py`` runs a ~44 ms ``gc.collect()`` after
+  each task. One task per part paid that P times; one per slot pays it
+  once per slot. The costs: a failed task re-runs every part it carried,
+  about P/slots of them (⌈P/slots⌉ with an even spread; hash placement is
+  uneven, e.g. 32 parts over 4 slots land 10/10/7/5), and the kernel must
+  time each part itself (``_extract_batches``). Resume stays per part,
+  because the output commits once per job: a killed job commits nothing,
+  and its rerun skips exactly the parts an earlier committed run recorded
+  as finished.
 - The extraction kernels cross the JVM↔Python boundary exactly once, on
   Arrow record batches; there is no per-row Python UDF anywhere.
 - Lineage rows ride the same output schema (rec='lineage', payload JSON in
@@ -41,8 +61,9 @@ Design notes for 100-TB scale:
 from __future__ import annotations
 
 import json
+import operator
 import time
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from functools import partial, update_wrapper
 from typing import Any
 
@@ -120,7 +141,7 @@ LINEAGE_JSON_SCHEMA = T.StructType(
 )
 
 
-def _esc_nul(s: pd.Series) -> pd.Series:
+def _esc_nul(s: str) -> str:
     """NUL-free injective encoding: \\x01 → \\x01\\x01, \\x00 → \\x01\\x02.
 
     pandas' C string hasher truncates at embedded NUL bytes (the
@@ -129,36 +150,38 @@ def _esc_nul(s: pd.Series) -> pd.Series:
     After this escape no field contains \\x00, and \\x01 is always followed
     by \\x01 or \\x02 — so the \\x01\\x03 field separator below can never
     appear inside an escaped field (injective join)."""
-    return s.str.replace("\x01", "\x01\x01", regex=False).str.replace(
-        "\x00", "\x01\x02", regex=False
-    )
+    return s.replace("\x01", "\x01\x01").replace("\x00", "\x01\x02")
 
 
 def turn_checksums(
-    conv_id: pd.Series, turn_idx: pd.Series, text: pd.Series
+    conv_id: Iterable[str | None], turn_idx: Iterable[int], text: Iterable[str | None]
 ) -> np.ndarray:
     """Vectorized order-insensitive per-turn digest (uint64); the part
     checksum is the wrapping sum. pandas' string hash is process- and
     partition-independent (fixed hash key), so resume runs reproduce it.
     Fields are NUL-escaped first: the hasher is only byte-exact on
-    NUL-free strings (see _esc_nul)."""
-    joined = (
-        _esc_nul(conv_id.astype("string"))
-        + "\x01\x03"
-        + turn_idx.astype("int64").astype("string")
-        + "\x01\x03"
-        + _esc_nul(text.astype("string"))
+    NUL-free strings (see _esc_nul). A turn with a missing conv_id or text
+    hashes as missing (2^64 - 1).
+
+    The joined keys are built in one Python pass, not with pandas ``.str``
+    ops: those digest identically (a property test pins it) but cost ~2 ms
+    per call whatever the size, and the kernel calls this once per part
+    slice of every batch."""
+    joined = np.array(
+        [
+            None
+            if c is None or x is None
+            else f"{_esc_nul(str(c))}\x01\x03{int(t)}\x01\x03{_esc_nul(str(x))}"
+            for c, t, x in zip(conv_id, turn_idx, text)
+        ],
+        dtype=object,
     )
-    return pd.util.hash_pandas_object(joined, index=False).to_numpy(np.uint64)
+    return pd.util.hash_array(joined)
 
 
 def turn_checksum(conv_id: str, turn_idx: int, text: str) -> int:
     """Scalar convenience wrapper over :func:`turn_checksums`."""
-    return int(
-        turn_checksums(
-            pd.Series([conv_id]), pd.Series([turn_idx]), pd.Series([text])
-        )[0]
-    )
+    return int(turn_checksums([conv_id], [turn_idx], [text])[0])
 
 
 def with_part_id(
@@ -176,18 +199,16 @@ def with_part_id(
     )
 
 
-def _extract_batch_frame(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One Arrow batch as a pandas frame → extraction columns, vectorized.
+def _extract_rows(text: np.ndarray, tool: np.ndarray) -> tuple[np.ndarray, ...]:
+    """Turn texts and tools (object arrays) → the extraction columns
+    ``extracted_text, n_rows, n_cols, status, retries``, vectorized.
 
     Pass-through tools (plain text — the majority class in a transcript
-    corpus) are handled with pandas string ops on the whole column; only
-    the payload-parsing tools (html/grid/json) call the per-document
-    kernels, over just their row subsets.
+    corpus) are handled with array ops on the whole slice; only the
+    payload-parsing tools (html/grid/json) call the per-document kernels,
+    over just their rows.
     """
-    n = len(pdf)
-    text = pdf["text"].astype("object")
-    tool = pdf["tool"].to_numpy(dtype=object)
-
+    n = len(text)
     ext = np.empty(n, dtype=object)
     n_rows = np.zeros(n, dtype=np.int32)
     n_cols = np.zeros(n, dtype=np.int32)
@@ -199,34 +220,46 @@ def _extract_batch_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     # pass-through: identity text, vectorized (extract_turn semantics)
     pt = ~parse_mask
     if pt.any():
-        vals = text.to_numpy(dtype=object)[pt]
+        vals = text[pt]
         vals = np.where([v is None for v in vals], "", vals)
         ext[pt] = vals
         status[pt] = np.where([bool(v) for v in vals], "ok", "empty")
 
     # payload-parsing tools: per-document kernels on their subsets
     for idx in np.flatnonzero(parse_mask):
-        rec = extract_turn(text.iloc[idx], tool[idx])
+        rec = extract_turn(text[idx], tool[idx])
         ext[idx] = rec["extracted_text"]
         n_rows[idx] = rec["n_rows"]
         n_cols[idx] = rec["n_cols"]
         status[idx] = rec["status"]
         retries[idx] = rec.get("retries", 0)
 
-    return pd.DataFrame(
-        {
-            "rec": np.full(n, "data", dtype=object),
-            "part_id": pdf["part_id"].to_numpy(np.int32),
-            "conv_id": pdf["conv_id"],
-            "turn_idx": pdf["turn_idx"].to_numpy(np.int32),
-            "tool": pdf["tool"],
-            "extracted_text": ext,
-            "n_rows": n_rows,
-            "n_cols": n_cols,
-            "status": status,
-            "_retries": retries,
-        }
-    )
+    return ext, n_rows, n_cols, status, retries
+
+
+def _part_slices(part_id: np.ndarray) -> Iterator[tuple[int, np.ndarray]]:
+    """(part id, row positions) for every part present in a batch."""
+    if not len(part_id):
+        return
+    order = np.argsort(part_id, kind="stable")
+    cuts = np.flatnonzero(np.diff(part_id[order])) + 1
+    for rows in np.split(order, cuts):
+        yield int(part_id[rows[0]]), rows
+
+
+#: How the lineage stats of two slices of one part combine. The checksum
+#: is the order-insensitive wrapping sum of the per-turn uint64 digests.
+_MERGE_STATS = {
+    "conv_min": min,
+    "conv_max": max,
+    "turn_min": min,
+    "turn_max": max,
+    "n_turns": operator.add,
+    "checksum": lambda a, b: (a + b) & 0xFFFFFFFFFFFFFFFF,
+    "error_count": operator.add,
+    "retry_count": operator.add,
+    "seconds": operator.add,
+}
 
 
 def _extract_batches(
@@ -235,70 +268,89 @@ def _extract_batches(
     """The fused extraction kernel: one Arrow batch in, one out, plus one
     lineage row per logical part at end-of-partition.
 
-    Per-part lineage stats (turn range, wrapping-sum checksum, error count)
-    are vectorized pandas groupby aggregates per batch, concatenated and
-    aggregated once more for parts that span batches — no per-row Python
-    outside the payload kernels. pandas sums the uint64 digests modulo 2^64,
-    so the checksum is the order-insensitive wrapping sum. Each lineage row
-    records the part layout (``num_parts``, ``turn_bucket``) so resume can
-    refuse a run with a different one.
+    A task carries many whole logical parts (``extract_stage``), so each
+    batch is split by ``part_id`` and every slice is extracted and
+    checksummed on its own under ``time.perf_counter``: a part's
+    ``duration_ms`` is the sum of its own slices' kernel and checksum time,
+    never the task's wall time. Per-part stats (turn range, wrapping-sum
+    checksum, error and retry counts) merge across batches by
+    ``_MERGE_STATS``. Each lineage row records the part layout
+    (``num_parts``, ``turn_bucket``) so resume can refuse a run with a
+    different one.
     """
-    start = time.monotonic()
-    per_batch: list[pd.DataFrame] = []
+    parts: dict[int, dict] = {}
     for batch in batches:
-        out = _extract_batch_frame(batch.to_pandas())
-        out["_ck"] = turn_checksums(out["conv_id"], out["turn_idx"], out["extracted_text"])
-        out["_err"] = (out["status"] == "error").astype("int64")
-        per_batch.append(
-            out.groupby("part_id", sort=False).agg(
-                conv_min=("conv_id", "min"),
-                conv_max=("conv_id", "max"),
-                turn_min=("turn_idx", "min"),
-                turn_max=("turn_idx", "max"),
-                n_turns=("conv_id", "size"),
-                checksum=("_ck", "sum"),
-                error_count=("_err", "sum"),
-                retry_count=("_retries", "sum"),
+        pdf = batch.to_pandas()
+        part_id = pdf["part_id"].to_numpy(np.int32)
+        conv = pdf["conv_id"].to_numpy(dtype=object)
+        turn = pdf["turn_idx"].to_numpy(np.int32)
+        text = pdf["text"].to_numpy(dtype=object)
+        tool = pdf["tool"].to_numpy(dtype=object)
+        n = len(pdf)
+        ext = np.empty(n, dtype=object)
+        n_rows = np.zeros(n, dtype=np.int32)
+        n_cols = np.zeros(n, dtype=np.int32)
+        status = np.empty(n, dtype=object)
+        for pid, rows in _part_slices(part_id):
+            t0 = time.perf_counter()
+            ext[rows], n_rows[rows], n_cols[rows], status[rows], retries = _extract_rows(
+                text[rows], tool[rows]
             )
-        )
-        out = out.drop(columns=["_ck", "_err", "_retries"])
-        yield pa.RecordBatch.from_pandas(
-            out, schema=_ARROW_SCHEMA, preserve_index=False
-        )
-    if not per_batch:
-        return
-    parts = pd.concat(per_batch)
-    if not parts.index.is_unique:  # a part spans batches: merge its rows
-        parts = parts.groupby(level=0).agg(
-            {
-                "conv_min": "min",
-                "conv_max": "max",
-                "turn_min": "min",
-                "turn_max": "max",
-                "n_turns": "sum",
-                "checksum": "sum",
-                "error_count": "sum",
-                "retry_count": "sum",
+            ck = turn_checksums(conv[rows], turn[rows], ext[rows])
+            convs = [c for c in conv[rows] if c is not None]
+            stats = {
+                "conv_min": min(convs, default=None),
+                "conv_max": max(convs, default=None),
+                "turn_min": int(turn[rows].min()),
+                "turn_max": int(turn[rows].max()),
+                "n_turns": len(rows),
+                "checksum": int(ck.sum()),  # uint64 sum: wraps modulo 2^64
+                "error_count": int((status[rows] == "error").sum()),
+                "retry_count": int(retries.sum()),
+                "seconds": time.perf_counter() - t0,
             }
+            prev = parts.get(pid)
+            parts[pid] = (
+                stats
+                if prev is None
+                else {k: merge(prev[k], stats[k]) for k, merge in _MERGE_STATS.items()}
+            )
+        yield pa.RecordBatch.from_pydict(
+            {
+                "rec": np.full(n, "data", dtype=object),
+                "part_id": part_id,
+                "conv_id": conv,
+                "turn_idx": turn,
+                "tool": tool,
+                "extracted_text": ext,
+                "n_rows": n_rows,
+                "n_cols": n_cols,
+                "status": status,
+            },
+            schema=_ARROW_SCHEMA,
         )
-    extra = {
-        "duration_ms": int((time.monotonic() - start) * 1000),
-        "status": "ok",
-        "num_parts": num_parts,
-        "turn_bucket": turn_bucket,
-    }
+    if not parts:
+        return
     lineage_rows = [
         json.dumps(
-            {**r, "part_id": pid, "checksum": f"{r['checksum']:016x}", **extra},
+            {
+                **{k: v for k, v in st.items() if k != "seconds"},
+                "part_id": pid,
+                "checksum": f"{st['checksum']:016x}",
+                "duration_ms": int(st["seconds"] * 1000),
+                "status": "ok",
+                "num_parts": num_parts,
+                "turn_bucket": turn_bucket,
+            },
             sort_keys=True,
         )
-        for pid, r in parts.to_dict("index").items()
+        for pid, st in parts.items()
     ]
     k = len(parts)
     yield pa.RecordBatch.from_pydict(
         {
             "rec": ["lineage"] * k,
-            "part_id": parts.index.tolist(),
+            "part_id": list(parts),
             "conv_id": [""] * k,
             "turn_idx": [-1] * k,
             "tool": [LINEAGE_TOOL] * k,
@@ -316,9 +368,10 @@ def warmup_python_workers(df_or_spark) -> None:
     kernel stack (pandas/numpy/pyarrow) with one trivial mapInArrow pass.
 
     Workers are reused across stages (spark.python.worker.reuse), so after
-    this the extraction stage runs at steady state. 32 workers importing
-    pandas concurrently is a measurable one-time cost (~15 s on the bench
-    host) that would otherwise be misattributed to per-turn throughput.
+    this the extraction stage runs at steady state. Every worker importing
+    pandas/numpy/pyarrow at once is a one-time cost (about 8 s at
+    ``local[4]`` on a 4-core host) that would otherwise be misattributed
+    to per-turn throughput.
     """
     spark = df_or_spark if isinstance(df_or_spark, SparkSession) else df_or_spark.sparkSession
     cores = spark.sparkContext.defaultParallelism
@@ -354,6 +407,19 @@ def extract_stage(
     run completed, through a broadcast left-anti join; ``only_parts`` keeps
     just the listed parts (used by tests to simulate a job killed after k
     partitions).
+
+    Task count: the shuffle still hashes on ``part_id``, but into
+    ``min(num_parts, defaultParallelism)`` partitions, so the extraction
+    runs one Python task per executor slot and each task carries whole
+    logical parts (a part never spans tasks; the kernel times every part
+    on its own). Every PySpark task pays a fixed Python cost no matter how
+    few rows it holds, measured at 130–300 ms of CPU on a 4-core host
+    (CPython 3.11, Spark 4.1): ``setup_spark_files`` calls
+    ``importlib.invalidate_caches()``, which makes each of the worker's
+    cached zipimporters re-read its archive directory (``pyspark.zip``
+    about 14 times), and the daemon runs a ``gc.collect()`` of about 44 ms.
+    One task per part paid that once per part; one per slot pays it once
+    per slot.
     """
     df = with_part_id(df, num_parts, turn_bucket)
     if finished is not None:
@@ -369,7 +435,7 @@ def extract_stage(
         # prune to the kernel's columns BEFORE the shuffle: ts (and any
         # extra user columns) never cross the exchange or the Python worker
         df.select("part_id", "conv_id", "turn_idx", "text", "tool")
-        .repartition(num_parts, "part_id")
+        .repartition(min(num_parts, df.sparkSession.sparkContext.defaultParallelism), "part_id")
         .mapInArrow(kernel, EXTRACT_SCHEMA)
     )
 

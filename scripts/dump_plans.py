@@ -49,10 +49,11 @@ def main() -> int:
     sections = [
         (
             "Extraction pipeline (`extract_stage`)",
-            "ONE exchange — the explicit salted repartition on `part_id` — then ONE "
-            "fused `MapInArrow` stage. The exchange input is exactly the kernel's "
-            "columns (`ts` and any user columns pruned before the shuffle); no "
-            "second shuffle, no sort, nothing per-row.",
+            "ONE exchange — the explicit salted repartition on `part_id`, into "
+            "min(P, slots) partitions (4 at `local[4]`) so each Python task carries "
+            "whole parts — then ONE fused `MapInArrow` stage. The exchange input is "
+            "exactly the kernel's columns (`ts` and any user columns pruned before "
+            "the shuffle); no second shuffle, no sort, nothing per-row.",
             extract_stage(transcripts, num_parts=8),
         ),
         (

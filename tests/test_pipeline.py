@@ -7,12 +7,14 @@ from __future__ import annotations
 import json
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from ocr_spark.fixtures import make_transcripts
 from ocr_spark.oracle import oracle_assemble, oracle_extract
 from ocr_spark.pipeline import (
+    _extract_batches,
     assemble_conversations,
     extract_stage,
     read_extracted,
@@ -132,6 +134,54 @@ def test_lineage_merges_across_arrow_batches(spark, corpus):
         return got.drop(columns="duration_ms").sort_values("part_id", ignore_index=True)
 
     pd.testing.assert_frame_equal(lineage(3), lineage(8192))
+
+
+def test_parts_never_split_across_tasks(spark, tmp_path):
+    """64 parts share local[4]'s 4 extraction tasks: each part still gets
+    exactly one lineage row, so no part was split across tasks."""
+    pdf = make_transcripts(n_convs=600, turns_low=1, turns_high=3, seed=44)
+    path = str(tmp_path / "transcripts.parquet")
+    pdf.to_parquet(path, index=False)
+    out = str(tmp_path / "out")
+    run_pipeline(spark, path, out, num_parts=64)
+    lin = read_lineage(spark, out).toPandas()
+    assert len(lin) == 64
+    assert lin["part_id"].nunique() == 64
+    assert lin["n_turns"].sum() == len(pdf)
+
+
+def _kernel_output(pdf: pd.DataFrame) -> tuple[pd.DataFrame, dict[int, dict]]:
+    """Data rows and lineage payloads (by part) of ``_extract_batches``
+    over one Arrow batch."""
+    batch = pa.RecordBatch.from_pandas(
+        pdf[["part_id", "conv_id", "turn_idx", "text", "tool"]], preserve_index=False
+    )
+    out = pa.Table.from_batches(
+        list(_extract_batches(iter([batch]), num_parts=2, turn_bucket=64))
+    ).to_pandas()
+    lineage = [json.loads(t) for t in out.loc[out["rec"] == "lineage", "extracted_text"]]
+    data = out[out["rec"] == "data"].sort_values(["conv_id", "turn_idx"], ignore_index=True)
+    return data, {r["part_id"]: r for r in lineage}
+
+
+def test_kernel_times_each_part_on_its_own():
+    """Two parts in one Arrow batch: the ~40 grid turns (about 1.2 ms each
+    to extract) take longer than the ~40 text turns (about 3 µs each), and
+    every other lineage field equals the part run in a batch of its own."""
+    pdf = make_transcripts(n_convs=40, turns_low=4, turns_high=6, seed=45)
+    grid = pdf[pdf["tool"] == "grid"].head(40).assign(part_id=0)
+    text = pdf[pdf["tool"] == "null"].head(40).assign(part_id=1)
+    assert len(grid) == len(text) == 40
+    both = pd.concat([grid, text]).sample(frac=1.0, random_state=3)
+    data, lineage = _kernel_output(both)
+    assert lineage[0]["duration_ms"] > lineage[1]["duration_ms"]
+
+    alone = [_kernel_output(part) for part in (grid, text)]
+    for pid, (_, own) in enumerate(alone):
+        got = {k: v for k, v in lineage[pid].items() if k != "duration_ms"}
+        assert got == {k: v for k, v in own[pid].items() if k != "duration_ms"}
+    want = pd.concat([d for d, _ in alone]).sort_values(["conv_id", "turn_idx"], ignore_index=True)
+    pd.testing.assert_frame_equal(data, want)
 
 
 def test_salting_splits_long_conversations(spark, tmp_path):

@@ -82,6 +82,13 @@ def test_extract_stage_exchanges_on_salted_part_id(spark):
     plan = _plan(extract_stage(df, num_parts=8))
     assert "hashpartitioning(part_id" in plan
     assert "MapInArrow" in plan
+    # one Python task per executor slot: 8 parts hash into local[4]'s 4
+    # slots, and fewer parts than slots into one task per part
+    assert spark.sparkContext.defaultParallelism == 4
+    for num_parts, tasks in ((8, 4), (2, 2)):
+        shuffles = _exchange_blocks(_plan(extract_stage(df, num_parts=num_parts)))
+        assert len(shuffles) == 1
+        assert re.search(rf"hashpartitioning\(part_id#\d+, {tasks}\)", shuffles[0])
     # ts is pruned before the exchange: the shuffled row is the kernel's
     # 6 columns, not the full input row (column refs print as `name#id`)
     exchange_block = plan.split("(2) Exchange")[1].split("(3)")[0]

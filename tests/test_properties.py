@@ -111,6 +111,50 @@ def test_checksum_sum_is_order_insensitive(rows, rnd):
     )
 
 
+def _pandas_turn_checksums(conv_id, turn_idx, text) -> np.ndarray:
+    """The digest spelled with pandas ``.str`` ops (the written outputs'
+    checksums were first computed this way)."""
+
+    def esc(s: pd.Series) -> pd.Series:
+        return s.str.replace("\x01", "\x01\x01", regex=False).str.replace(
+            "\x00", "\x01\x02", regex=False
+        )
+
+    joined = (
+        esc(conv_id.astype("string"))
+        + "\x01\x03"
+        + turn_idx.astype("int64").astype("string")
+        + "\x01\x03"
+        + esc(text.astype("string"))
+    )
+    return pd.util.hash_pandas_object(joined, index=False).to_numpy(np.uint64)
+
+
+_CONTROL_TEXT = st.one_of(
+    st.none(), st.text(alphabet=st.sampled_from("\x00\x01\x02\x03ab é😀"), max_size=8), TEXT
+)
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    st.lists(
+        st.tuples(_CONTROL_TEXT, st.integers(-(2**31), 2**31 - 1), _CONTROL_TEXT),
+        min_size=1,
+        max_size=30,
+    )
+)
+def test_checksums_match_the_pandas_string_formula(rows):
+    """Lineage checksums stay byte-for-byte comparable with outputs that
+    were written before: NUL and separator bytes, non-ASCII text and
+    missing fields all digest as the pandas formulation does."""
+    pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "text"]).astype(
+        {"conv_id": object, "text": object}
+    )
+    got = turn_checksums(pdf["conv_id"], pdf["turn_idx"], pdf["text"])
+    want = _pandas_turn_checksums(pdf["conv_id"], pdf["turn_idx"], pdf["text"])
+    assert got.tolist() == want.tolist()
+
+
 _GRID_CELL = st.text(
     alphabet=st.sampled_from(
         "abcdefghijklmnopqrstuvwxyz0123456789 .,-_:/%+()"

@@ -85,20 +85,40 @@ def test_resume_processes_only_unfinished(spark, corpus, tmp_path):
     assert dups == 0
 
 
-def test_part_duration_hist_flags_straggler(spark):
+def test_part_duration_hist_flags_straggler():
     """The job-summary histogram puts a straggler part in the last bucket
     and conserves the part count."""
     import job
 
-    lineage = spark.createDataFrame(
-        [(i, d) for i, d in enumerate([10, 12, 11, 13, 10, 95])],
-        "part_id int, duration_ms long",
-    )
-    h = job.part_duration_hist(lineage, 10, 95)
+    h = job.part_duration_hist([10, 12, 11, 13, 10, 95], 10, 95)
     assert sum(h["counts"]) == 6
     assert h["counts"][0] == 5  # the homogeneous fast parts
     assert h["counts"][7] == 1  # the straggler
     assert h["min_ms"] == 10 and h["width_ms"] == 11
+
+
+@pytest.mark.parametrize("durations", [[40, 10, 30, 20, 95, 10], [7, 3, 5], [4]])
+def test_lineage_summary_matches_spark_aggregates(spark, durations):
+    """The job summary, computed in Python from one collect, reports what
+    the Spark aggregates report, and refuses more lineage rows than parts."""
+    import job
+
+    lineage = spark.createDataFrame(
+        [(i, 3 + i, i % 2, d) for i, d in enumerate(durations)],
+        "part_id int, n_turns long, error_count long, duration_ms long",
+    )
+    got = job.lineage_summary(lineage, num_parts=len(durations))
+    want = lineage.agg(
+        F.count("*").alias("parts"),
+        F.sum("n_turns").alias("rows"),
+        F.sum("error_count").alias("errors"),
+        F.percentile_approx("duration_ms", F.lit(0.5)).alias("part_ms_p50"),
+        F.max("duration_ms").alias("part_ms_max"),
+    ).first()
+    assert {k: got[k] for k in want.asDict()} == want.asDict()
+    assert sum(got["part_ms_hist"]["counts"]) == len(durations)
+    with pytest.raises(ValueError, match="lineage rows"):
+        job.lineage_summary(lineage, num_parts=len(durations) - 1)
 
 
 def test_assemble_over_written_output_matches_oracle(spark, corpus, tmp_path):
