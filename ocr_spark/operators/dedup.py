@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ocr_spark.operators.graph import connected_components
+
 DEFAULT_NUM_HASHES = 16
 DEFAULT_BAND_SIZE = 4
 DEFAULT_SHINGLE_N = 3  # signature + verify share the same shingle unit
@@ -301,7 +303,7 @@ def lsh_candidate_pairs(
     the signature kernel TWICE (Spark does not dedup common subplans).
     The cache must outlive any action on the returned LAZY frame, so the
     caller owns its lifetime: pass ``caches`` to collect persisted frames
-    for unpersisting after your action (duplicate_clusters does). With
+    and release them after your action (verified_dup_pairs does). With
     ``caches=None`` the cache is released automatically when the returned
     frame is garbage-collected (weakref finalizer) — nothing leaks."""
     own = caches is None
@@ -409,7 +411,6 @@ def verified_dup_pairs(
     num_hashes: int = DEFAULT_NUM_HASHES,
     band_size: int = DEFAULT_BAND_SIZE,
     ngram: int = 3,
-    caches: "list[DataFrame] | None" = None,
 ) -> DataFrame:
     """LSH candidates → exact n-gram-Jaccard verify ≥ threshold: the
     (a, b, jaccard) edges safe to cluster over. Verification is MANDATORY
@@ -421,11 +422,9 @@ def verified_dup_pairs(
     not depend on banding luck.)
     Shingle arrays are computed ONCE per doc and joined to the pairs by
     id, so the quadratic-ish candidate set never re-tokenizes text.
-    Cache ownership follows lsh_candidate_pairs: pass ``caches`` to own
-    the persisted frames, or leave None for GC-tied release."""
-    own = caches is None
-    if own:
-        caches = []
+    The persisted band and shingle frames are released when the
+    returned frame is garbage-collected."""
+    caches: list[DataFrame] = []
     pairs = lsh_candidate_pairs(
         df, text_col, id_col, num_hashes, band_size, caches=caches
     )
@@ -476,7 +475,7 @@ def verified_dup_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("a", "b", "jaccard")
     )
-    return _own_caches(result, caches) if own else result
+    return _own_caches(result, caches)
 
 
 def containment_pairs(
@@ -553,67 +552,22 @@ def duplicate_clusters(
     id_col: str = "doc_id",
     num_hashes: int = DEFAULT_NUM_HASHES,
     band_size: int = DEFAULT_BAND_SIZE,
-    max_iters: int = 10,
 ) -> DataFrame:
     """Connected-components duplicate clustering: every doc labeled with
     the MIN doc_id of its near-duplicate component (VERIFIED LSH pairs as
     edges — see verified_dup_pairs; singletons keep their own id).
 
-    Iterative min-label propagation — each round is one join + one
-    keyed min-aggregate, both distributed; the driver sees ONE scalar per
-    round (the label sum, which strictly decreases until fixpoint, so
-    equality = convergence). Near-dup components are near-cliques with
-    tiny diameters, so 2-3 rounds converge in practice; ``max_iters``
-    bounds the worst case (a path graph). Deterministic under any
-    partitioning — labels are mins, never first-seen."""
-    caches: list[DataFrame] = []
-    pairs = verified_dup_pairs(
-        df, threshold, text_col, id_col, num_hashes, band_size, caches=caches
+    The components come from :func:`graph.connected_components`
+    (hook-and-jump rounds, log-diameter many, each ending in a local
+    checkpoint), so a long chain of pairwise-similar docs clusters like
+    a clique. The labels are materialized when this returns, and the
+    pair build's caches are released with ``pairs`` on return."""
+    pairs = verified_dup_pairs(df, threshold, text_col, id_col, num_hashes, band_size)
+    labels = connected_components(
+        pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")),
+        df.select(F.col(id_col).alias("node")).distinct(),
     )
-    edges = pairs.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).unionByName(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-    edges = edges.persist()
-    labels = df.select(F.col(id_col).alias("doc_id")).distinct().withColumn(
-        "cluster_id", F.col("doc_id")
-    ).persist()
-    prev_sum = labels.agg(F.sum("cluster_id")).first()[0]
-    converged = False
-    for _ in range(max_iters):
-        prop = (
-            edges.join(labels, edges.src == labels.doc_id)
-            .select(F.col("dst").alias("doc_id"), "cluster_id")
-        )
-        new_labels = (
-            labels.unionByName(prop)
-            .groupBy("doc_id")
-            .agg(F.min("cluster_id").alias("cluster_id"))
-            .persist()
-        )
-        new_sum = new_labels.agg(F.sum("cluster_id")).first()[0]
-        labels.unpersist()
-        labels = new_labels
-        if new_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = new_sum
-    edges.unpersist()
-    for c in caches:  # band/shingle caches from the pair build
-        c.unpersist()
-    if not converged:
-        # a non-fixpoint labeling is WRONG (it is not the transitive
-        # closure, and silently differs from the recursive-CTE oracle) —
-        # fail loudly; callers with genuinely deep components (diameter >
-        # max_iters, e.g. a chain of pairwise-similar docs) raise the
-        # budget instead of consuming a partial answer
-        labels.unpersist()
-        raise RuntimeError(
-            f"duplicate_clusters: min-label propagation did not converge "
-            f"within max_iters={max_iters} rounds; raise max_iters"
-        )
-    # the labels frame stays persisted for the caller's action; release
-    # follows the handle's lifetime
-    return _own_caches(labels, [labels])
+    return labels.withColumnRenamed("node", "doc_id")
 
 
 def embedding_cosine_dedup_lsh(

@@ -3,10 +3,12 @@ the crawl-frontier / source-weighting side of a training-data pipeline
 (PageRank-weighted domain sampling is the classic quality prior for
 web text; see Page et al. 1999, and Common Crawl's host-level ranks).
 
-Everything is integer micro-unit arithmetic with a FIXED iteration
-count, so the DuckDB oracle replays the exact values by textually
-unrolling the same iterations (the k-means / IVF precedent in
-operators/similarity.py).
+PageRank and HITS are integer micro-unit arithmetic with a FIXED
+iteration count, so the DuckDB oracle replays the exact values by
+textually unrolling the same iterations (the k-means / IVF precedent in
+operators/similarity.py). :func:`connected_components` instead runs to
+its fixpoint; its callers' oracles are recursive-CTE transitive
+closures, which reach the same min-id labels by construction.
 
 Reference parity note: the reference repo (a single-document OCR
 script) has no corpus-level graph pass; this is builder-brief breadth
@@ -221,3 +223,85 @@ def oracle_hits_sql(edges_cte: str, iters: int = HITS_ITERS) -> str:
         f" JOIN h{iters} ON a{iters}.node = h{iters}.node"
     )
     return "".join(parts)
+
+
+#: Round cap for :func:`connected_components`: hook-and-jump needs
+#: O(log diameter) rounds (a pure-Python replay needs at most 14 on
+#: paths, cycles, trees and grids of 10^4 nodes), so the cap is hit only
+#: by a defect in the loop, never by the data.
+CC_MAX_ROUNDS = 64
+
+
+def _drop_checkpoint(df: DataFrame) -> None:
+    """Free a ``localCheckpoint()`` frame's blocks now, not at the
+    driver's next garbage collection; the frame is unusable after."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def connected_components(edges: DataFrame, nodes: DataFrame) -> DataFrame:
+    """``(node, cluster_id)`` for every row of ``nodes``: ``cluster_id``
+    is the smallest node id of the node's component in the undirected
+    graph ``edges`` ``(src, dst)``, each pair given once. Every endpoint
+    must be a row of ``nodes``; ids may be of any orderable type; a NULL
+    node keeps its row with a NULL ``cluster_id``.
+
+    Each round is hook-and-jump over the labels ``L`` (initially the
+    node's own id; Kiveris et al., *Connected Components in MapReduce
+    and Beyond*, SoCC 2014): hook — ``m(v)`` is the smallest label of
+    ``v`` and its neighbours, and ``v`` and ``L(v)`` both take the
+    smallest ``m`` offered to them; jump — ``L(v)`` becomes ``L(L(v))``.
+    Rounds grow with log(diameter), not the diameter. The old label
+    rides through the hook aggregate, so one ``count()`` of changed
+    labels finds the fixpoint. Labels are mins, so the result does not
+    depend on partitioning.
+
+    The edges (both directions from one evaluation of ``edges``), the
+    initial labels and each round's labels are ``localCheckpoint()``-ed,
+    so every round's plan is one round deep (a round reads the previous
+    labels more than once, so without it the plan doubles each round).
+    The cost: checkpoint blocks live on the executors, so a lost
+    executor fails the query instead of recomputing it. Superseded
+    checkpoints and the edges are freed on every path."""
+    both = F.explode(F.array(F.array("src", "dst"), F.array("dst", "src")))
+    e = (
+        edges.select(both.alias("__e"))
+        .select(F.col("__e")[0].alias("src"), F.col("__e")[1].alias("dst"))
+        .localCheckpoint()
+    )
+    no_old = F.lit(None).cast(nodes.schema["node"].dataType).alias("__old")
+    try:
+        ck = nodes.select(
+            "node", F.col("node").alias("label"), F.col("node").alias("__old")
+        ).localCheckpoint()
+        for _ in range(CC_MAX_ROUNDS):
+            own = ck.select("node", "label", F.col("label").alias("__old"))
+            nbr = e.join(ck.select(F.col("node").alias("dst"), "label"), "dst")
+            m = (
+                own.unionByName(nbr.select(F.col("src").alias("node"), "label", no_old))
+                .groupBy("node")
+                .agg(F.min("label").alias("__m"), F.min("__old").alias("__old"))
+            )
+            hooked = (
+                m.unionByName(m.select(F.col("__old").alias("node"), "__m", no_old))
+                .groupBy("node")
+                .agg(F.min("__m").alias("__h"), F.min("__old").alias("__old"))
+            )
+            # left join: a NULL node finds no parent but keeps its row
+            parent = hooked.select(
+                F.col("node").alias("__h"), F.col("__h").alias("__p")
+            )
+            step = (
+                hooked.join(parent, "__h", "left")
+                .select("node", F.coalesce("__p", "__h").alias("label"), "__old")
+                .localCheckpoint()
+            )
+            _drop_checkpoint(ck)
+            ck = step
+            if ck.filter(~F.col("label").eqNullSafe(F.col("__old"))).count() == 0:
+                return ck.select("node", F.col("label").alias("cluster_id"))
+        _drop_checkpoint(ck)
+    finally:
+        _drop_checkpoint(e)
+    raise RuntimeError(
+        f"connected_components: no fixpoint in {CC_MAX_ROUNDS} rounds (a defect)"
+    )

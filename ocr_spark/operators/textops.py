@@ -1380,13 +1380,14 @@ def _two_phase_rank(
     survivors — so a head group with billions of rows never funnels
     into one partition.  ``limit`` is an int or a per-row Column (a
     broadcast-joined per-group quota).  Emits ``__rank`` (int) with
-    rows already filtered to __rank <= limit.  Requires a NUMERIC
-    ``id_col`` (pmod on a non-numeric id yields NULL shards and the
-    prune would silently pass everything through)."""
+    rows already filtered to __rank <= limit.  Shards on a hash of
+    ``id_col``, so an id of any type spreads a group over the shards.
+    ``order_cols`` must be a total order ending in ``id_col``; the
+    top-k is then exact under any sharding."""
     from pyspark.sql import Window
 
     lim = F.lit(limit) if isinstance(limit, int) else limit
-    shard = F.pmod(F.col(id_col), F.lit(prune_shards))
+    shard = F.pmod(F.xxhash64(id_col), F.lit(prune_shards))
     w1 = Window.partitionBy(*group_cols, "__shard").orderBy(*order_cols)
     pruned = (
         df.withColumn("__shard", shard)

@@ -44,6 +44,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ocr_spark.operators.graph import connected_components
+
 
 def _conv_window() -> Window:
     return Window.partitionBy("conv_id").orderBy("turn_idx")
@@ -312,8 +314,8 @@ def boilerplate_turns(turns: DataFrame, min_convs: int = 5) -> DataFrame:
     conversation structure intact (the C4 line-dedup idea lifted from
     lines-within-documents to turns-within-conversations).
 
-    Blank turns are never counted (clean_turns owns those), and NULL
-    text hashes as '' on both engines.
+    Blank turns (NULL, '' or all spaces; clean_turns owns them) are
+    never counted, and NULL text hashes as '' on both engines.
 
     Scale shape: the per-turn digest is a map-side JVM md5, so only
     (digest, conv_id) pairs reach the distinct-count exchange and the
@@ -325,7 +327,7 @@ def boilerplate_turns(turns: DataFrame, min_convs: int = 5) -> DataFrame:
         "turn_idx",
         "role",
         F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("__dig"),
-        (F.coalesce(F.col("text"), F.lit("")) == "").alias("__blank"),
+        (F.trim(F.coalesce(F.col("text"), F.lit(""))) == "").alias("__blank"),
     )
     counts = (
         base.filter(~F.col("__blank"))
@@ -1247,86 +1249,45 @@ def conversation_clusters(
     band_size: int = NEAR_DUP_BAND_SIZE,
     min_jaccard_e6: int = NEAR_DUP_MIN_JACCARD_E6,
     max_bucket: int = NEAR_DUP_MAX_BUCKET,
-    max_iters: int = 8,
 ) -> DataFrame:
     """The fuzzy-dedup funnel end: connect the verified near-dup pairs
-    (:func:`near_dup_conversations`) into components by iterative
-    min-label propagation and elect one KEEPER per cluster — the
-    conversation with the most turns (near-dups are typically
+    (:func:`near_dup_conversations`) into components with
+    :func:`graph.connected_components` and elect one KEEPER per cluster
+    — the conversation with the most turns (near-dups are typically
     truncated or re-exported copies, so the longest transcript is the
     most complete), ties on conv_id asc.  Singletons keep themselves.
 
-    Each propagation round is one join + one keyed min-aggregate, both
-    distributed; the driver sees ONE scalar per round (the count of
-    changed labels — zero = fixpoint; label sums don't exist for
-    string ids).  Near-dup components are near-cliques, so 2-3 rounds
-    converge; a non-fixpoint labeling is WRONG (not the transitive
-    closure) and raises rather than returning silently.
+    The components are min-conv_id labels from hook-and-jump rounds,
+    log-diameter many, so a long chain of serially edited re-exports
+    clusters like a clique.
 
-    Scale shape: the edge frame is pairs-sized (persisted), the label
-    frame is one row per CONVERSATION, and every round shuffles only
-    (conv_id, label) — text is gone before the first iteration."""
+    Scale shape: the edge frame is pairs-sized, the label frame is one
+    row per CONVERSATION, and every round shuffles only (conv_id,
+    label) — text is gone before the first round."""
     from ocr_spark.operators.dedup import _own_caches
 
     pairs = near_dup_conversations(
         turns, num_hashes, band_size, min_jaccard_e6, max_bucket
-    )
-    edges = (
-        pairs.select(F.col("conv_a").alias("src"), F.col("conv_b").alias("dst"))
-        .unionByName(
-            pairs.select(
-                F.col("conv_b").alias("src"), F.col("conv_a").alias("dst")
-            )
-        )
-        .persist()
     )
     stats = (
         turns.groupBy("conv_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_turns"))
         .persist()
     )
-    labels = stats.select(
-        "conv_id", F.col("conv_id").alias("cluster_id")
-    ).persist()
-    converged = False
-    for _ in range(max_iters):
-        prop = edges.join(
-            labels, edges.src == labels.conv_id
-        ).select(F.col("dst").alias("conv_id"), "cluster_id")
-        new_labels = (
-            labels.unionByName(prop)
-            .groupBy("conv_id")
-            .agg(F.min("cluster_id").alias("cluster_id"))
-            .persist()
+    try:
+        labels = connected_components(
+            pairs.select(F.col("conv_a").alias("src"), F.col("conv_b").alias("dst")),
+            stats.select(F.col("conv_id").alias("node")),
         )
-        changed = (
-            new_labels.join(
-                labels.withColumnRenamed("cluster_id", "__old"), "conv_id"
-            )
-            .filter(F.col("cluster_id") != F.col("__old"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    # pairs' shingle/band caches release with its handle (kept alive
-    # through the loop above by this frame reference)
-    del pairs
-    if not converged:
-        labels.unpersist()
+    except BaseException:
         stats.unpersist()
-        raise RuntimeError(
-            "conversation_clusters: min-label propagation did not "
-            f"converge within max_iters={max_iters} rounds"
-        )
+        raise
     w = Window.partitionBy("cluster_id").orderBy(
         F.desc("n_turns"), F.asc("conv_id")
     )
     out = (
-        labels.join(stats, "conv_id")
+        labels.withColumnRenamed("node", "conv_id")
+        .join(stats, "conv_id")
         .withColumn("__rn", F.row_number().over(w))
         .select(
             "conv_id",
@@ -1335,7 +1296,7 @@ def conversation_clusters(
             (F.col("__rn") == 1).alias("is_keeper"),
         )
     )
-    return _own_caches(out, [labels, stats])
+    return _own_caches(out, [stats])
 
 
 def merge_role_runs(turns: DataFrame) -> DataFrame:
@@ -1531,13 +1492,13 @@ def sft_manifest(
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     off = F.coalesce(F.sum("n_tokens").over(w), F.lit(0)).cast("long")
-    out = base.select(
+    out = base.withColumn("start_off", off).select(
         "conv_id",
         "shard",
         "n_tokens",
-        off.alias("start_off"),
-        F.floor(off / F.lit(budget)).cast("long").alias("seq_idx"),
-        (off % budget).cast("long").alias("pos_in_seq"),
+        "start_off",
+        F.expr(f"CAST(start_off DIV {budget} AS BIGINT)").alias("seq_idx"),
+        (F.col("start_off") % budget).cast("long").alias("pos_in_seq"),
     )
     return _own_caches(out, [merged])
 
@@ -1626,10 +1587,11 @@ def dynamic_batching(
         F.expr(f"CAST(n_tokens DIV {bucket_tokens} AS INT)"),
     )
     w = Window.partitionBy("len_bucket").orderBy("__key", "conv_id")
-    rn = F.row_number().over(w) - 1
-    placed = base.withColumn(
-        "batch_idx", F.floor(rn / batch_size).cast("int")
-    ).withColumn("pos_in_batch", (rn % batch_size).cast("int"))
+    placed = base.withColumn("__rn", F.row_number().over(w) - 1).select(
+        "*",
+        F.expr(f"CAST(__rn DIV {batch_size} AS INT)").alias("batch_idx"),
+        (F.col("__rn") % batch_size).cast("int").alias("pos_in_batch"),
+    )
     wb = Window.partitionBy("len_bucket", "batch_idx")
     return placed.select(
         "conv_id",

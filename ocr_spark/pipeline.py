@@ -73,6 +73,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ocr_spark.kernels.align import align_pages
 from ocr_spark.kernels.extract import (
@@ -108,19 +109,7 @@ EXTRACT_SCHEMA = T.StructType(
     ]
 )
 
-_ARROW_SCHEMA = pa.schema(
-    [
-        ("rec", pa.string()),
-        ("part_id", pa.int32()),
-        ("conv_id", pa.string()),
-        ("turn_idx", pa.int32()),
-        ("tool", pa.string()),
-        ("extracted_text", pa.string()),
-        ("n_rows", pa.int32()),
-        ("n_cols", pa.int32()),
-        ("status", pa.string()),
-    ]
-)
+_ARROW_SCHEMA = to_arrow_schema(EXTRACT_SCHEMA)
 
 LINEAGE_JSON_SCHEMA = T.StructType(
     [

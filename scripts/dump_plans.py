@@ -153,13 +153,15 @@ def main() -> int:
             dedup.embedding_cosine_dedup_lsh(emb),
         ),
         (
-            "Duplicate clustering round (`duplicate_clusters`, one iteration)",
-            "Each min-label propagation round = one join (edges × labels) + one "
-            "keyed min-aggregate, both distributed; the driver receives a single "
-            "scalar (label sum) per round for the convergence check. Shown here: "
-            "the verified-pair edge build feeding round 1 — LSH candidates joined "
-            "to per-doc shingle arrays (computed once, by id) for the mandatory "
-            "Jaccard verify.",
+            "Duplicate clustering edges (`duplicate_clusters`)",
+            "The verified pairs are the edges of `graph.connected_components`. "
+            "Each of its hook-and-jump rounds is one join (edges × labels), two "
+            "keyed min-aggregates (hook) and one self-join (jump), all "
+            "distributed, ending in a local checkpoint; the driver reads one "
+            "count of changed labels per round to detect the fixpoint. Shown "
+            "here: the verified-pair edge build feeding round 1 — LSH candidates "
+            "joined to per-doc shingle arrays (computed once, by id) for the "
+            "mandatory Jaccard verify.",
             dedup.verified_dup_pairs(docs),
         ),
         (

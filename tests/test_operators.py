@@ -544,6 +544,21 @@ def test_duplicate_clusters_transitive_min_label(spark):
     assert out[3] == 3 and out[4] == 4  # singletons keep their own id
 
 
+def test_connected_components_long_chain_one_cluster(spark):
+    # a 101-node path whose string ids are in shuffled order: plain
+    # min-label propagation needs ~100 rounds here; the helper must
+    # return one cluster labelled with the min id. A NULL node keeps its
+    # row with a NULL cluster_id.
+    from ocr_spark.operators.graph import connected_components
+
+    ids = [f"c{i:03d}" for i in range(101)]
+    np.random.default_rng(7).shuffle(ids)
+    edges = spark.createDataFrame(list(zip(ids, ids[1:])), "src string, dst string")
+    nodes = spark.createDataFrame([(v,) for v in ids + [None]], "node string")
+    out = {r.node: r.cluster_id for r in connected_components(edges, nodes).collect()}
+    assert out == {**{v: "c000" for v in ids}, None: None}
+
+
 def test_ann_recall_vs_exact_baseline(spark):
     # quality telemetry: approximate ANN must recover a healthy share of
     # the exact top-3 on the deterministic test corpus (low-cosine regime

@@ -197,3 +197,63 @@ def test_borderless_roundtrip_any_charset_cells(header, body):
         if any(row)
     ]
     assert read_borderless_cells(img) == want
+
+
+def _union_find_min_labels(nodes, edges):
+    """Reference components: union-find, each component labelled with
+    its smallest id."""
+    parent = {v: v for v in nodes}
+
+    def root(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = root(a), root(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: root(v) for v in nodes}
+
+
+def test_connected_components_match_union_find(spark):
+    """On random small graphs, with integer and with string ids (whose
+    order differs: "10" < "9"), every node's cluster_id is the min id of
+    its component, as a union-find computes it."""
+    from hypothesis import HealthCheck
+
+    from ocr_spark.operators.graph import connected_components
+
+    @settings(
+        max_examples=12,
+        deadline=None,
+        suppress_health_check=[HealthCheck.too_slow],
+    )
+    @given(
+        st.integers(1, 24).flatmap(
+            lambda n: st.tuples(
+                st.permutations(range(n)),
+                st.lists(
+                    st.tuples(st.integers(0, n - 1), st.integers(0, n - 1)),
+                    max_size=2 * n,
+                ),
+            )
+        ),
+        st.booleans(),
+    )
+    def check(graph, string_ids):
+        perm, pairs = graph
+        ids = [str(p) if string_ids else p for p in perm]
+        edges = [(ids[a], ids[b]) for a, b in pairs]
+        kind = "string" if string_ids else "long"
+        got = connected_components(
+            spark.createDataFrame(edges, f"src {kind}, dst {kind}"),
+            spark.createDataFrame([(v,) for v in ids], f"node {kind}"),
+        ).collect()
+        assert {r.node: r.cluster_id for r in got} == _union_find_min_labels(
+            ids, edges
+        )
+        assert len(got) == len(ids)
+
+    check()

@@ -1974,3 +1974,25 @@ def test_stratified_split_zero_quota_strata_emit_nothing(spark):
     ).toPandas()
     assert len(out) == 1
     assert out.lang.tolist() == ["en"]
+
+
+def test_two_phase_rank_shards_string_ids(spark):
+    # a string id_col must spread one group over several prune shards
+    # (pmod on the raw string cannot), and the two-phase top-k must still
+    # equal the single-phase rank: the order ends in id_col, so the
+    # per-shard prune never drops a row the final rank keeps
+    from pyspark.sql import Window
+
+    rows = [("g", f"d{i}", i % 7) for i in range(200)] + [("h", "x1", 0)]
+    df = spark.createDataFrame(rows, "grp string, id string, v int")
+    order = [F.desc("v"), F.asc("id")]
+    shards = df.select(F.pmod(F.xxhash64("id"), F.lit(8)).alias("s"))
+    assert shards.distinct().count() > 1
+    got = textops._two_phase_rank(df, ["grp"], order, "id", 5, prune_shards=8)
+    plan = got._jdf.queryExecution().optimizedPlan().toString()
+    assert "pmod(xxhash64(id#" in plan
+    want = df.withColumn(
+        "__rank", F.row_number().over(Window.partitionBy("grp").orderBy(*order))
+    ).filter(F.col("__rank") <= 5)
+    key = ["grp", "id", "__rank"]
+    assert sorted(got.select(key).collect()) == sorted(want.select(key).collect())
